@@ -40,28 +40,13 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# SQL-literal-safe term: no quote/backslash/control chars, so a probe
-# filter can be built as ONE parsed SQL string (r14 optimization round:
-# the Column/isin form costs one py4j round-trip per literal — ~200
-# round-trips ≈ 40 ms per probe on the serving critical path; the
-# construction class r13 already moved for the score/fusion
-# expressions). Terms failing the check keep the Column form.
-_SQL_SAFE_TERM = re.compile(r"\A[^'\\\x00-\x1f\x7f]*\Z")
-_SQL_IDENT = re.compile(r"\A[A-Za-z_][A-Za-z0-9_]*\Z")
-
-
-def _sql_term_list(terms: Sequence[str]) -> str | None:
-    """``'a','b','c'`` when every term is literal-safe, else None."""
-    if all(isinstance(t, str) and _SQL_SAFE_TERM.match(t) for t in terms):
-        return ",".join(f"'{t}'" for t in terms)
-    return None
+from pg_vectorize_spark import sqltext as sq
 
 # --------------------------------------------------------------- xxhash64
 # Pure-Python XXH64 (public spec, Yann Collet) matching Spark's
@@ -721,9 +706,9 @@ class JobFtsIndexManager:
 
     def _empty_probe(self) -> DataFrame:
         meta = self._load_meta()
+        pkey_type = meta.get("pkey_type", "bigint")
         return self.spark.createDataFrame(
-            [], f"{meta['pkey']} {meta.get('pkey_type', 'bigint')}, "
-            "n_matched bigint"
+            [], f"{sq.ident(meta['pkey'])} {pkey_type}, n_matched bigint"
         )
 
     def _index_scan(self) -> DataFrame:
@@ -769,70 +754,57 @@ class JobFtsIndexManager:
         if not terms or not meta.get("has_data", True):
             return self._empty_probe()
         pkey = meta["pkey"]
-        buckets = self.query_buckets(terms)
-        lits = _sql_term_list(terms)
-        if lits is not None:
-            # one-parse fast path: IDENTICAL predicate (partition IN +
-            # term IN), one py4j round-trip instead of one per literal
-            hit = self._index_scan().where(
-                f"`{self.PART_COL}` IN ({','.join(str(int(b)) for b in buckets)})"
-                f" AND term IN ({lits})"
-            )
-        else:
-            hit = self._index_scan().filter(
-                F.col(self.PART_COL).isin(buckets)
-                & F.col("term").isin(list(terms))
-            )
-        # overlay: main minus tombstoned keys (their current terms live
-        # in pending), union the pending store's matches. Consulted
-        # whenever the stores EXIST — fastupdate mode or the adaptive
-        # wide-update/delete escape — so a batch-built index pays
-        # nothing (two file-existence checks, no Spark work). The
-        # tombstone set is bounded by the churn since the last fold
-        # (compact_every cadence), so the anti-join broadcasts; pending
-        # is the same bounded size.
+        return (
+            self._matched_postings(pkey, terms)
+            .groupBy(sq.ident(pkey))
+            .agg(F.expr("count(1) AS n_matched"))
+        )
+
+    def _matched_postings(self, pkey: str, terms: Sequence[str]) -> DataFrame:
+        """The (pkey, term) postings matching ``terms``: the pruned index
+        scan (partition IN on the terms' buckets AND term IN, one parse)
+        under the fastupdate overlay — main minus tombstoned keys (their
+        current terms live in pending), union the pending store's
+        matches. The overlay is consulted whenever the stores EXIST —
+        fastupdate mode or the adaptive wide-update/delete escape — so a
+        batch-built index pays two file-existence checks and no Spark
+        work. The tombstone set is bounded by the churn since the last
+        fold (compact_every cadence), so the anti-join broadcasts;
+        pending is the same bounded size."""
+        term_in = sq.in_list("term", terms)
+        hit = self._index_scan().where(
+            sq.in_list(sq.ident(self.PART_COL), self.query_buckets(terms))
+            + " AND " + term_in
+        )
         tomb = self._tomb_ds()
         if tomb.exists():
             hit = hit.join(
-                F.broadcast(tomb.read().select(pkey)),
+                F.broadcast(tomb.read().select(sq.ident(pkey))),
                 pkey,
                 "left_anti",
             )
         pend = self._pending_ds()
         if pend.exists():
-            pend_hit = (
-                pend.read().where(f"term IN ({lits})")
-                if lits is not None
-                else pend.read().filter(F.col("term").isin(list(terms)))
-            )
-            hit = hit.unionByName(pend_hit)
-        return hit.groupBy(pkey).agg(
-            F.expr("count(1) AS n_matched")
+            hit = hit.unionByName(pend.read().where(term_in))
+        return hit
+
+    @staticmethod
+    def _overlap_score(
+        probe: DataFrame, pkey: str, count_col: str, n_terms: int
+    ) -> DataFrame:
+        """(pkey, fts_score): matched-term count over |query terms|
+        (``fts_score_expr`` parity), one parse."""
+        return probe.selectExpr(
+            sq.ident(pkey),
+            f"CAST({sq.ident(count_col)} AS DOUBLE) / "
+            f"{sq.double(n_terms)} AS fts_score",
         )
 
     def probe_scores(self, terms: Sequence[str]) -> DataFrame:
-        """(pkey, fts_score) — the overlap rank straight off the index:
-        matched-term count over |query terms| (``fts_score_expr``
-        parity). The division is built as one SQL parse when the pkey is
-        a plain identifier — ``repr`` double literals parse
-        bit-identically (the query_vector_lit precedent), so scores are
-        float-bit-equal to the Column form (parity-pinned in
-        tests/test_fts_index.py)."""
-        meta = self._load_meta()
-        pkey = meta["pkey"]
-        denom = float(len(terms)) if terms else 1.0
-        probe = self.probe(terms)
-        if _SQL_IDENT.match(pkey):
-            return probe.selectExpr(
-                f"`{pkey}`",
-                "CAST(n_matched AS DOUBLE) / "
-                f"{repr(denom)}D AS fts_score",
-            )
-        return probe.select(
-            F.col(pkey),
-            (F.col("n_matched").cast("double") / F.lit(denom)).alias(
-                "fts_score"
-            ),
+        """(pkey, fts_score) — the overlap rank straight off the index."""
+        pkey = self._load_meta()["pkey"]
+        return self._overlap_score(
+            self.probe(terms), pkey, "n_matched", max(len(terms), 1)
         )
 
     def probe_scores_multi(
@@ -865,74 +837,30 @@ class JobFtsIndexManager:
             )
         pkey = meta["pkey"]
         union_terms = sorted({t for i in live for t in term_sets[i]})
-        buckets = self.query_buckets(union_terms)
-        ulits = _sql_term_list(union_terms)
-        if ulits is not None:
-            hit = self._index_scan().where(
-                f"`{self.PART_COL}` IN ({','.join(str(int(b)) for b in buckets)})"
-                f" AND term IN ({ulits})"
-            )
-        else:
-            hit = self._index_scan().filter(
-                F.col(self.PART_COL).isin(buckets)
-                & F.col("term").isin(union_terms)
-            )
-        tomb = self._tomb_ds()
-        if tomb.exists():
-            hit = hit.join(
-                F.broadcast(tomb.read().select(pkey)),
-                pkey,
-                "left_anti",
-            )
-        pend = self._pending_ds()
-        if pend.exists():
-            pend_hit = (
-                pend.read().where(f"term IN ({ulits})")
-                if ulits is not None
-                else pend.read().filter(F.col("term").isin(union_terms))
-            )
-            hit = hit.unionByName(pend_hit)
-
-        def _count_i(i: int):
-            lits_i = _sql_term_list(term_sets[i])
-            if lits_i is not None:
-                # identical expression, one parse: SUM(CASE WHEN ...)
-                # is what the Column form resolves to; the cast keeps
-                # the Column form's explicit LongType
-                return F.expr(
-                    "CAST(sum(CASE WHEN term IN "
-                    f"({lits_i}) THEN 1 ELSE 0 END) AS BIGINT)"
-                ).alias(f"_n_{i}")
-            return (
-                F.sum(
-                    F.when(
-                        F.col("term").isin(term_sets[i]), F.lit(1)
-                    ).otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias(f"_n_{i}")
-            )
-
+        n_col = {i: f"_n_{i}" for i in live}
+        # SUM(CASE WHEN ...) per set; the cast keeps a LongType count
         counts = (
-            hit.groupBy(pkey)
-            .agg(*[_count_i(i) for i in live])
+            self._matched_postings(pkey, union_terms)
+            .groupBy(sq.ident(pkey))
+            .agg(*[
+                F.expr(
+                    "CAST(sum(CASE WHEN "
+                    f"{sq.in_list('term', term_sets[i])} THEN 1 ELSE 0 "
+                    f"END) AS BIGINT) AS {sq.ident(n_col[i])}"
+                )
+                for i in live
+            ])
             .localCheckpoint(eager=False)
         )
-        out: list[DataFrame] = []
-        for i, ts in enumerate(term_sets):
-            if not ts:
-                out.append(self.probe_scores(ts))
-                continue
-            n_i = F.col(f"_n_{i}")
-            out.append(
-                counts.filter(n_i > 0).select(
-                    F.col(pkey),
-                    (n_i.cast("double") / F.lit(float(len(ts)))).alias(
-                        "fts_score"
-                    ),
-                )
+        return [
+            self._overlap_score(
+                counts.where(f"{sq.ident(n_col[i])} > 0"),
+                pkey, n_col[i], len(ts),
             )
-        return out
+            if ts
+            else self.probe_scores(ts)
+            for i, ts in enumerate(term_sets)
+        ]
 
     def drop(self) -> None:
         shutil.rmtree(self.index_dir, ignore_errors=True)

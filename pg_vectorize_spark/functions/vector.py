@@ -20,6 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pg_vectorize_spark import sqltext as sq
 from pg_vectorize_spark.providers.local import HASH_MOD, HASH_MULT, HASH_SEED
 
 
@@ -52,20 +53,51 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot_product(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def cosine_similarity_to_query(emb: Column, query_vec: Sequence[float]) -> Column:
-    """Cosine similarity against a CONSTANT query vector.
+def _query_fold_sql(emb_col: str, vals: list[float]) -> tuple[str, str]:
+    """(cast emb, dot) SQL text against a constant query vector — the
+    ``dot_product`` fold (both sides cast to double, ``acc + x*y`` left
+    to right from 0.0) spelled as one expression."""
+    cast_e = f"transform({sq.ident(emb_col)}, x -> CAST(x AS DOUBLE))"
+    cast_q = f"transform({sq.vector(vals)}, x -> CAST(x AS DOUBLE))"
+    dot = (
+        f"aggregate(zip_with({cast_e}, {cast_q}, (x, y) -> x * y), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+    return cast_e, dot
 
-    The query norm is folded on the driver (left-to-right float64, identical
-    bits to the in-plan fold — Python's sum is the same reduction), so each
-    row computes one norm instead of two. At brute-force-scan scale that's
-    a third of the per-row vector math.
+
+def dot_product_to_query(emb_col: str, query_vec: Sequence[float]) -> Column:
+    """``dot_product`` of column ``emb_col`` with a CONSTANT query vector,
+    built as ONE SQL parse (the cosine of pre-normalized vectors)."""
+    return F.expr(_query_fold_sql(emb_col, [float(v) for v in query_vec])[1])
+
+
+def cosine_similarity_to_query(
+    emb_col: str, query_vec: Sequence[float]
+) -> Column:
+    """Cosine similarity of column ``emb_col`` against a CONSTANT query
+    vector, built as ONE SQL parse — the reference's
+    ``1 - (embeddings <=> $1::vector)``.
+
+    Same expression tree as ``cosine_similarity``: double casts,
+    left-to-right float64 folds, zero-denominator rows score 0.0. The
+    query norm is folded on the driver (same left-to-right fold, so the
+    same bits as the in-plan one), so each row computes one norm instead
+    of two — a third of the per-row vector math at brute-force-scan
+    scale. A computed vector must be selected under a name first.
     """
-    import math
-
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-    q = query_vector_lit(query_vec)
-    denom = l2_norm(emb) * F.lit(qnorm)
-    return F.when(denom > 0, dot_product(emb, q) / denom).otherwise(F.lit(0.0))
+    vals = [float(v) for v in query_vec]
+    ss = 0.0
+    for v in vals:
+        ss = ss + v * v
+    cast_e, dot = _query_fold_sql(emb_col, vals)
+    denom = (
+        f"(sqrt(aggregate({cast_e}, 0.0D, (acc, x) -> acc + x * x)) * "
+        f"{sq.double(math.sqrt(ss))})"
+    )
+    return F.expr(
+        f"CASE WHEN {denom} > 0 THEN {dot} / {denom} ELSE 0.0D END"
+    )
 
 
 def l2_normalize(a: Column) -> Column:
@@ -78,33 +110,11 @@ def l2_normalize(a: Column) -> Column:
 
 def query_vector_lit(vec: Sequence[float]) -> Column:
     """A query vector as a literal array<double> column (plan-level constant —
-    the Spark analog of binding ``$1::vector``).
-
-    Built as ONE SQL-string expression instead of per-element
-    ``F.lit``/``F.array`` calls: the element-wise form costs ~2 py4j
-    round-trips per dimension on the query critical path (~130 for a
-    64-dim query — measured as the bulk of ``_scored_semantic``'s plan
-    build, scripts/serving_profile.py, r13 optimization round). Python's
-    ``repr`` emits the shortest decimal that round-trips the exact
-    float64, and Spark's SQL parser (Java ``Double.parseDouble``) is
-    correctly rounded, so each parsed literal is BIT-IDENTICAL to the
-    ``F.lit`` form; both forms constant-fold to the same array literal.
-    Non-finite components (no provider emits them) and the empty vector
-    keep the element-wise form rather than relying on inf/nan SQL
-    spellings."""
-    vals = [float(v) for v in vec]
-    if vals and all(math.isfinite(v) for v in vals):
-        return F.expr(vector_sql_literal(vals))
-    return F.array(*[F.lit(v) for v in vals])
-
-
-def vector_sql_literal(vals: Sequence[float]) -> str:
-    """The SQL text of an array<double> literal — the one place the
-    repr-literal rendering lives (query_vector_lit and the search
-    operators' one-parse score expressions share it, so a parser edge
-    case gets fixed once). Callers must ensure every value is finite:
-    inf/nan have no SQL double spelling."""
-    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
+    the Spark analog of binding ``$1::vector``), parsed from ONE SQL
+    string: the element-wise ``F.array(F.lit, ...)`` form costs ~2 py4j
+    round-trips per dimension on the query critical path. The literal
+    rendering (``sqltext.vector``) is bit-identical to ``F.lit``."""
+    return F.expr(sq.vector([float(v) for v in vec]))
 
 
 # ---------------------------------------------------------------------------

@@ -44,6 +44,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pg_vectorize_spark import sqltext as sq
 from pg_vectorize_spark.errors import VectorizeError
 
 INDEX_METHODS = ("brute", "ivf", "ivfpq", "signbit")
@@ -636,11 +637,9 @@ class JobIndexManager:
             local = self._partition_rows_local("bucket", probes)
             if local is not None:
                 return local
-            return (
-                self._index_scan()
-                .filter(F.col("bucket").isin(probes))
-                .count()
-            )
+            return self._index_scan().where(
+                sq.in_list("bucket", probes)
+            ).count()
         from pg_vectorize_spark.operators.ann import probe_cells
 
         probed = probe_cells(self._centroids_local(), query_vec, nprobe)
@@ -648,9 +647,7 @@ class JobIndexManager:
         local = self._partition_rows_local("cell", cells)
         if local is not None:
             return local
-        return (
-            self._index_scan().filter(F.col("cell").isin(cells)).count()
-        )
+        return self._index_scan().where(sq.in_list("cell", cells)).count()
 
     def _partition_rows_local(
         self, part_col: str, values: Sequence[int]
@@ -720,13 +717,7 @@ class JobIndexManager:
             self.nbits,
             radius,
         )
-        if not probes:  # empty IN () does not parse — keep Column form
-            return self._index_scan().filter(F.col("bucket").isin(probes))
-        # one-parse IN list (r14): integer literals, no fallback needed —
-        # the Column isin form costs one py4j round-trip per element
-        return self._index_scan().where(
-            f"bucket IN ({','.join(str(int(p)) for p in probes)})"
-        )
+        return self._index_scan().where(sq.in_list("bucket", probes))
 
     def _ivf_candidates(
         self, query_vec: Sequence[float], nprobe: int
@@ -737,12 +728,7 @@ class JobIndexManager:
         # path (r13 optimization round — bit-parity probe_cells_local)
         probed = probe_cells(self._centroids_local(), query_vec, nprobe)
         cells = [int(r["centroid_id"]) for r in probed]
-        if not cells:  # empty IN () does not parse — keep Column form
-            return self._index_scan().filter(F.col("cell").isin(cells))
-        # one-parse IN list (r14) — same predicate, one py4j round-trip
-        return self._index_scan().where(
-            f"cell IN ({','.join(str(c) for c in cells)})"
-        )
+        return self._index_scan().where(sq.in_list("cell", cells))
 
     def _ivfpq_candidates(
         self,

@@ -57,19 +57,18 @@ def brute_force_topk(
     negated), so callers fuse ranks identically across metrics.
     """
     from pg_vectorize_spark.functions.vector import (
-        dot_product,
+        dot_product_to_query,
         query_vector_lit,
     )
 
-    emb = F.col(emb_col)
     if metric == "cosine":
-        score = cosine_similarity_to_query(emb, query_vec)
+        score = cosine_similarity_to_query(emb_col, query_vec)
     elif metric == "ip":
-        score = dot_product(emb, query_vector_lit(query_vec))
+        score = dot_product_to_query(emb_col, query_vec)
     elif metric == "l2":
         q = query_vector_lit(query_vec)
         dist2 = F.aggregate(
-            F.zip_with(emb, q, lambda a, b: (a - b) * (a - b)),
+            F.zip_with(F.col(emb_col), q, lambda a, b: (a - b) * (a - b)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
@@ -356,7 +355,7 @@ def maxsim_topk(
     brute_force_topk), one map-side-combined MAX/COUNT aggregate keyed
     on the doc, TakeOrderedAndProject — no window, no join.
     """
-    score = cosine_similarity_to_query(F.col(emb_col), query_vec)
+    score = cosine_similarity_to_query(emb_col, query_vec)
     per = (
         chunk_emb_df.select(F.col(doc_col), score.alias("_s"))
         .groupBy(doc_col)
@@ -392,17 +391,19 @@ def quantized_topk(
     Scale shape: pure scan + per-row fold + TakeOrderedAndProject — the
     same plan as brute_force_topk, on a quarter of the bytes.
     """
-    from pg_vectorize_spark.functions.vector import (
-        cosine_similarity_to_query,
-        dequantize_expr,
-    )
+    from pg_vectorize_spark.functions.vector import dequantize_expr
 
     deq = dequantize_expr(
         F.col(codes_col), F.col(mn_col), F.col(mx_col), levels
     )
-    score = cosine_similarity_to_query(deq, query_vec)
     return (
-        qdf.select(F.col(pkey), score.alias("similarity_score"))
+        qdf.select(F.col(pkey), deq.alias("_deq"))
+        .select(
+            F.col(pkey),
+            cosine_similarity_to_query("_deq", query_vec).alias(
+                "similarity_score"
+            ),
+        )
         .orderBy(F.desc("similarity_score"), F.asc(pkey))
         .limit(k)
     )
@@ -675,9 +676,9 @@ def probe_cells(
         centroids_df.select(
             F.col("centroid_id"),
             F.col("centroid_vec"),
-            cosine_similarity_to_query(
-                F.col("centroid_vec"), query_vec
-            ).alias("_qsim"),
+            cosine_similarity_to_query("centroid_vec", query_vec).alias(
+                "_qsim"
+            ),
         )
         .orderBy(F.desc("_qsim"), F.asc("centroid_id"))
         .limit(nprobe)
@@ -807,7 +808,7 @@ def ivf_topk(
     probed = (
         centroids_df.select(
             F.col("centroid_id"),
-            cosine_similarity_to_query(F.col("centroid_vec"), query_vec).alias(
+            cosine_similarity_to_query("centroid_vec", query_vec).alias(
                 "_qsim"
             ),
         )

@@ -274,7 +274,7 @@ def pq_adc_rerank_topk(
         k=rerank_candidates, codes_col=codes_col,
     ).select(pkey)
     pruned = emb_df.join(cand, pkey, "left_semi")
-    score = cosine_similarity_to_query(F.col(emb_col), query_vec)
+    score = cosine_similarity_to_query(emb_col, query_vec)
     return (
         pruned.select(F.col(pkey), score.alias("similarity_score"))
         .orderBy(F.desc("similarity_score"), F.asc(pkey))
@@ -569,7 +569,7 @@ def ivfpq_topk(
         residual=residual,
     ).select(pkey)
     pruned = emb_df.join(cand, pkey, "left_semi")
-    score = cosine_similarity_to_query(F.col(emb_col), query_vec)
+    score = cosine_similarity_to_query(emb_col, query_vec)
     return (
         pruned.select(F.col(pkey), score.alias("similarity_score"))
         .orderBy(F.desc("similarity_score"), F.asc(pkey))

@@ -27,13 +27,12 @@ Scale design (100 TB notes):
 
 from __future__ import annotations
 
-import math
-import re
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pg_vectorize_spark import sqltext as sq
 from pg_vectorize_spark.filters import FilterValue, apply_filters
 from pg_vectorize_spark.functions.text import (
     STOP_WORDS,
@@ -50,9 +49,7 @@ from pg_vectorize_spark.functions.text import (
 
 from pg_vectorize_spark.functions.vector import (
     cosine_similarity_to_query,
-    dot_product,
-    query_vector_lit,
-    vector_sql_literal,
+    dot_product_to_query,
 )
 
 DEFAULT_LIMIT = 10
@@ -195,69 +192,23 @@ def _match_tokens(concat: Column, analyzer: str, terms: list[str]) -> Column:
     return _doc_tokens(concat, analyzer)
 
 
-_SQL_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
-
-
 def _scored_semantic(
     emb_df: DataFrame,
     pkey: str,
     query_vec: Sequence[float],
     emb_col: str = "embeddings",
     pre_normalized: bool = False,
-    _force_column_form: bool = False,
 ) -> DataFrame:
-    """(pkey, similarity_score) for every candidate vector.
-
-    The score expression is built as ONE SQL string (a single parse
-    round-trip) instead of nested Column/HOF constructors: the Column
-    form costs ~70 py4j round-trips per query — the bulk of this
-    function's ~40 ms on the serving critical path (cProfile,
-    scripts/serving_profile.py, r13 optimization round). The SQL spells
-    out the IDENTICAL expression tree — same casts, same left-to-right
-    float64 folds, same zero-denominator CASE — and ``repr`` literals
-    parse to bit-identical doubles (the query_vector_lit precedent), so
-    scores are float-bit-equal to the Column form (pinned by
-    tests/test_search.py::TestScoredSemanticSqlParity). Non-finite /
-    empty vectors and non-identifier column names keep the Column form.
-    """
-    vals = [float(v) for v in query_vec]
-    if (
-        not _force_column_form
-        and vals
-        and all(math.isfinite(v) for v in vals)
-        # the squared-norm fold can overflow to inf even on finite
-        # components — inf has no SQL double literal, so such vectors
-        # keep the Column form (F.lit(inf) is fine there); same
-        # left-to-right sum as the qnorm fold below
-        and math.isfinite(sum(v * v for v in vals))
-        and _SQL_NAME.match(emb_col)
-    ):
-        arr = vector_sql_literal(vals)
-        cast_e = f"transform(`{emb_col}`, x -> CAST(x AS DOUBLE))"
-        cast_q = f"transform({arr}, x -> CAST(x AS DOUBLE))"
-        dot = (
-            f"aggregate(zip_with({cast_e}, {cast_q}, (x, y) -> x * y), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
-        if pre_normalized:
-            # normalize-at-write parity: cosine == dot product
-            score = F.expr(dot)
-        else:
-            qnorm = math.sqrt(sum(v * v for v in vals))
-            denom = (
-                f"(sqrt(aggregate({cast_e}, 0.0D, "
-                f"(acc, x) -> acc + x * x)) * {repr(qnorm)}D)"
-            )
-            score = F.expr(
-                f"CASE WHEN {denom} > 0 THEN {dot} / {denom} "
-                "ELSE 0.0D END"
-            )
-        return emb_df.select(F.col(pkey), score.alias("similarity_score"))
+    """(pkey, similarity_score) for every candidate vector — the score is
+    one SQL parse (``cosine_similarity_to_query``; a plain dot product
+    under normalize-at-write parity)."""
     if pre_normalized:
-        score = dot_product(F.col(emb_col), query_vector_lit(query_vec))
+        score = dot_product_to_query(emb_col, query_vec)
     else:
-        score = cosine_similarity_to_query(F.col(emb_col), query_vec)
-    return emb_df.select(F.col(pkey), score.alias("similarity_score"))
+        score = cosine_similarity_to_query(emb_col, query_vec)
+    return emb_df.select(
+        F.col(sq.ident(pkey)), score.alias("similarity_score")
+    )
 
 
 def semantic_search(
@@ -282,8 +233,12 @@ def semantic_search(
     cols = list(return_columns) if return_columns else [c for c in source_df.columns]
     # order on the pre-projection frame so the pkey tiebreaker survives even
     # when return_columns drops the key; Catalyst still plans TakeOrdered.
-    ordered = joined.orderBy(F.desc("similarity_score"), F.asc(pkey))
-    return ordered.select(*cols, "similarity_score").limit(num_results)
+    ordered = joined.orderBy(
+        F.desc("similarity_score"), F.asc(sq.ident(pkey))
+    )
+    return ordered.select(*map(sq.ident, cols), "similarity_score").limit(
+        num_results
+    )
 
 
 def full_text_search(
@@ -925,7 +880,6 @@ def _fuse_and_project(
     return_columns: Sequence[str] | None,
     filters: dict[str, FilterValue] | None,
     where_sql: str | None,
-    _force_column_form: bool = False,
 ) -> DataFrame:
     """Rank fusion (J3 + A3) + join back to source.
 
@@ -937,100 +891,41 @@ def _fuse_and_project(
     exactly the joined row. rrf_score is computed over the aggregated
     (integer) ranks — bit-identical to the join form.
 
-    Construction is SQL-string based (selectExpr / F.expr) on the fast
-    path: the Column form cost ~60 py4j round-trips per query, the
-    single biggest driver-side plan-construction item on the serving
-    critical path (cProfile, scripts/serving_profile.py, r13
-    optimization round). The strings spell the IDENTICAL expressions —
-    same NULL casts, same int rank arithmetic, same coalesce-to-0.0
-    fusion with ``repr`` float literals parsing bit-identically (the
-    query_vector_lit precedent) — and the rrf projection folds into the
-    aggregate's result expressions (the optimizer collapsed the
-    post-agg Project into the Aggregate anyway). Parity pinned by
-    tests/test_search.py::TestFuseSqlParity; a non-identifier pkey
-    keeps the Column form.
+    Built as SQL strings (selectExpr / F.expr, one parse each), with the
+    rrf projection folded into the aggregate's result expressions.
+    ``rrf_k`` keeps its Python type: an int adds in integer arithmetic,
+    a float in double.
     """
-    if (
-        not _force_column_form
-        and _SQL_NAME.match(pkey)
-        # inf/nan weights have no SQL double spelling, and a non-integral
-        # rrf_k would be truncated by the {k} rendering — both keep the
-        # Column form (which handles them via F.lit)
-        and math.isfinite(float(semantic_weight))
-        and math.isfinite(float(fts_weight))
-        and math.isfinite(float(rrf_k))
-        and float(rrf_k) == int(rrf_k)
-    ):
-        qp = f"`{pkey}`"
-        sem_part = sem.selectExpr(
-            qp,
-            "similarity_score",
-            "semantic_rank",
-            "CAST(NULL AS INT) AS fts_rank",
+    qp = sq.ident(pkey)
+    sem_part = sem.selectExpr(
+        qp,
+        "similarity_score",
+        "semantic_rank",
+        "CAST(NULL AS INT) AS fts_rank",
+    )
+    fts_part = fts.selectExpr(
+        qp,
+        "CAST(NULL AS DOUBLE) AS similarity_score",
+        "CAST(NULL AS INT) AS semantic_rank",
+        "fts_rank",
+    )
+    w_s = sq.double(semantic_weight)
+    w_f = sq.double(fts_weight)
+    k = sq.literal(rrf_k)
+    fused = (
+        sem_part.unionByName(fts_part)
+        .groupBy(qp)
+        .agg(
+            F.expr("max(similarity_score) AS similarity_score"),
+            F.expr("max(semantic_rank) AS semantic_rank"),
+            F.expr("max(fts_rank) AS fts_rank"),
+            F.expr(
+                f"(coalesce({w_s} / ({k} + max(semantic_rank)), 0.0D)"
+                f" + coalesce({w_f} / ({k} + max(fts_rank)), 0.0D))"
+                " AS rrf_score"
+            ),
         )
-        fts_part = fts.selectExpr(
-            qp,
-            "CAST(NULL AS DOUBLE) AS similarity_score",
-            "CAST(NULL AS INT) AS semantic_rank",
-            "fts_rank",
-        )
-        w_s = repr(float(semantic_weight))
-        w_f = repr(float(fts_weight))
-        k = int(rrf_k)
-        fused = (
-            sem_part.unionByName(fts_part)
-            .groupBy(pkey)
-            .agg(
-                F.expr("max(similarity_score) AS similarity_score"),
-                F.expr("max(semantic_rank) AS semantic_rank"),
-                F.expr("max(fts_rank) AS fts_rank"),
-                F.expr(
-                    f"(coalesce({w_s}D / ({k} + max(semantic_rank)), 0.0D)"
-                    f" + coalesce({w_f}D / ({k} + max(fts_rank)), 0.0D))"
-                    " AS rrf_score"
-                ),
-            )
-        )
-    else:
-        sem_part = sem.select(
-            F.col(pkey),
-            F.col("similarity_score"),
-            F.col("semantic_rank"),
-            F.lit(None).cast("int").alias("fts_rank"),
-        )
-        fts_part = fts.select(
-            F.col(pkey),
-            F.lit(None).cast("double").alias("similarity_score"),
-            F.lit(None).cast("int").alias("semantic_rank"),
-            F.col("fts_rank"),
-        )
-        fused = (
-            sem_part.unionByName(fts_part)
-            .groupBy(pkey)
-            .agg(
-                F.max("similarity_score").alias("similarity_score"),
-                F.max("semantic_rank").alias("semantic_rank"),
-                F.max("fts_rank").alias("fts_rank"),
-            )
-            .select(
-                F.col(pkey),
-                F.col("similarity_score"),
-                F.col("semantic_rank"),
-                F.col("fts_rank"),
-                (
-                    F.coalesce(
-                        F.lit(float(semantic_weight))
-                        / (F.lit(rrf_k) + F.col("semantic_rank")),
-                        F.lit(0.0),
-                    )
-                    + F.coalesce(
-                        F.lit(float(fts_weight))
-                        / (F.lit(rrf_k) + F.col("fts_rank")),
-                        F.lit(0.0),
-                    )
-                ).alias("rrf_score"),
-            )
-        )
+    )
 
     # --- join back to source (broadcast the tiny fused side) ---------------
     joined = source_df.join(F.broadcast(fused), pkey, "inner")
@@ -1039,9 +934,10 @@ def _fuse_and_project(
     if where_sql:
         joined = joined.filter(F.expr(where_sql))
     cols = list(return_columns) if return_columns else list(source_df.columns)
-    ordered = joined.orderBy(F.desc("rrf_score"), F.asc(pkey))
+    ordered = joined.orderBy(F.desc("rrf_score"), F.asc(qp))
     return ordered.select(
-        *cols, "rrf_score", "semantic_rank", "fts_rank", "similarity_score"
+        *map(sq.ident, cols),
+        "rrf_score", "semantic_rank", "fts_rank", "similarity_score",
     ).limit(num_results)
 
 

@@ -39,6 +39,8 @@ _SHUFFLE_NODE = re.compile(
     r"\bExchange (hashpartitioning|rangepartitioning"
     r"|RoundRobinPartitioning|SinglePartition)"
 )
+_BROADCAST_NODE = re.compile(r"\bBroadcastExchange\b")
+_EXCHANGE_WORD = re.compile(r"\bExchange\b")
 
 
 def _plan_has_exchange(df: DataFrame) -> bool:
@@ -49,27 +51,27 @@ def _plan_has_exchange(df: DataFrame) -> bool:
     BroadcastExchange does not make ``.rdd`` re-execute map stages, and
     identifiers that merely contain the word (an `ExchangeRate` column)
     never print with a partitioning argument. Unknown/unreadable plans
-    report False so callers fall back to the plain partition-count
-    check.
+    report False, so callers fall back to the plain partition-count
+    check — and say so at WARNING.
     """
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception as exc:  # py4j / analysis errors only — plan text
-        # unreadable; fall back to the plain partition-count check
-        # (ADVICE r13: fall back LOUDLY, not silently)
-        _log.debug("_plan_has_exchange: plan unreadable (%s)", exc)
+    except Exception as exc:  # py4j / analysis errors only
+        _log.warning(
+            "_plan_has_exchange: plan unreadable (%s); pin skipped, "
+            "falling back to the partition-count check", exc,
+        )
         return False
     found = bool(_SHUFFLE_NODE.search(plan))
-    if not found and "Exchange" in plan:
-        # a node spelled "Exchange ..." that the regex does not know —
-        # e.g. a Spark version renaming partitioning nodes would
-        # silently disable the pin (perf regression with no signal).
-        # BroadcastExchange is expected and fine; log anything else.
-        if not re.search(r"\bBroadcastExchange\b", plan):
-            _log.debug(
-                "_plan_has_exchange: plan contains 'Exchange' but no "
-                "known shuffle-partitioning form — regex may be stale"
-            )
+    if not found and _EXCHANGE_WORD.search(_BROADCAST_NODE.sub("", plan)):
+        # an "Exchange" node the regex does not know — e.g. a Spark
+        # version renaming partitioning nodes would silently disable
+        # the pin (perf regression with no signal)
+        _log.warning(
+            "_plan_has_exchange: plan contains an Exchange node with no "
+            "known shuffle-partitioning form — regex may be stale; pin "
+            "skipped"
+        )
     return found
 
 

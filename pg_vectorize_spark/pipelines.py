@@ -408,6 +408,9 @@ class CorpusPipeline:
         the same anti-join — bit-identical output (pinned by
         tests/test_pipelines.py parity).
 
+        ``method="exact"`` (``dedup``'s default) semi-joins the narrow
+        rows on ``exact_dedup``'s keep-keys instead of anti-joining pairs.
+
         Terminal; returns the ``sequence_pack`` frame.
         """
         from pg_vectorize_spark.functions.text import token_count_expr
@@ -418,12 +421,17 @@ class CorpusPipeline:
             F.col(self.text_col),
             token_count_expr(F.col(self.text_col)).alias("n_tokens"),
         ).localCheckpoint(eager=False)
-        pairs = CorpusPipeline(
-            self.spark, base_all, self.pkey, self.text_col
-        ).duplicate_pairs(method, threshold)
-        base = dedup_survivors(
-            base_all.select(self.pkey, "n_tokens"), self.pkey, pairs
-        )
+        narrow = base_all.select(self.pkey, "n_tokens")
+        if method == "exact":
+            keep = exact_dedup(base_all, self.text_col, self.pkey).select(
+                F.col("keep_id").alias(self.pkey)
+            )
+            base = narrow.join(keep, self.pkey, "left_semi")
+        else:
+            pairs = CorpusPipeline(
+                self.spark, base_all, self.pkey, self.text_col
+            ).duplicate_pairs(method, threshold)
+            base = dedup_survivors(narrow, self.pkey, pairs)
         return sequence_pack(
             base, self.pkey, "n_tokens", block_size,
             order_buckets=order_buckets,

@@ -8,8 +8,8 @@ proxy/src/message_parser.rs:124-268).
 
 Spark analog: a regex pre-pass over SQL strings submitted to
 ``VectorizeSession.sql``. ``vectorize.embed('q', 'job')`` becomes a Spark
-``array(CAST(.. AS DOUBLE), ...)`` literal, so the full expression power of
-Spark SQL composes with query-time embeddings:
+``array<double>`` literal (``sqltext.vector``), so the full expression power
+of Spark SQL composes with query-time embeddings:
 
     SELECT doc_id FROM docs_view
     ORDER BY cosine_sim(embeddings, vectorize.embed('what is spark?', 'docs'))
@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 from typing import TYPE_CHECKING
 
+from pg_vectorize_spark import sqltext as sq
 from pg_vectorize_spark.errors import VectorizeError
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -50,12 +51,6 @@ def find_embed_calls(sql: str) -> list[tuple[str, str, str]]:
     return out
 
 
-def vector_sql_literal(vec: list[float]) -> str:
-    """A vector as a Spark SQL array<double> literal."""
-    inner = ", ".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vec)
-    return f"array({inner})"
-
-
 def rewrite_embed_calls(sql: str, session: "VectorizeSession") -> str:
     """Replace every vectorize.embed('q','job') with a vector literal.
 
@@ -73,7 +68,7 @@ def rewrite_embed_calls(sql: str, session: "VectorizeSession") -> str:
             job.model, api_key=session._resolve_api_key(job, None)
         )
         vec = provider.generate_embedding([query])[0]
-        return vector_sql_literal(vec)
+        return sq.vector(vec)
 
     rewritten = _EMBED_CALL_RE.sub(_sub, sql)
     if re.search(r"vectorize\.embed", rewritten, re.IGNORECASE):

@@ -1,10 +1,55 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, "/root/repo")
+
+
+def _named_targets(config) -> list[tuple[Path, str]]:
+    """(file, test path) of every node-id argument (``file::test``)."""
+    out = []
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            out.append(
+                (Path(config.invocation_params.dir, path).resolve(), rest)
+            )
+    return out
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_collection_modifyitems(config, items):
+    """An explicit node-id selection runs the named tests even when the
+    default ``-m 'not soak and not slow'`` (pyproject addopts) would
+    deselect them — otherwise ``pytest file::slow_test`` reports "no
+    tests collected" and reads as a pass. Named items are hidden from
+    the mark filter and put back in place; an explicit ``-m`` on the
+    command line still wins, and runs without node ids are untouched."""
+    targets = _named_targets(config)
+    user_m = any(
+        str(a).startswith("-m") for a in config.invocation_params.args
+    )
+    if not targets or user_m:
+        yield
+        return
+
+    def named(item) -> bool:
+        rest = item.nodeid.partition("::")[2]
+        return any(
+            item.path.resolve() == path
+            and (rest == t or rest.startswith((t + "::", t + "[")))
+            for path, t in targets
+        )
+
+    order = list(items)
+    pinned = {id(it) for it in order if named(it)}
+    items[:] = [it for it in order if id(it) not in pinned]
+    yield
+    kept = {id(it) for it in items} | pinned
+    items[:] = [it for it in order if id(it) in kept]
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"

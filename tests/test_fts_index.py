@@ -897,3 +897,67 @@ class TestMultiProbe:
         self._assert_multi_equals_single(mgr, term_lists)
         assert mgr.maybe_compact(force=True) > 0
         self._assert_multi_equals_single(mgr, term_lists)
+
+
+class TestAwkwardTermsAndKeys:
+    """Terms and key names that used to take the Column fallback (quotes,
+    backslashes, control characters, ``${...}``, a non-identifier key)
+    go through the same one-parse predicate and must score exactly like
+    an independent Python overlap count — fresh, under the fastupdate
+    overlay, and through the shared multi-probe."""
+
+    PKEY = "1abc"
+    ODD = ["o'brien", "back\\slash", "nul\x00byte", "line\nbreak",
+           "${x}", "${spark.app.name}", "$\\{esc}"]
+    DOCS = {
+        1: ["o'brien", "plain"],
+        2: ["back\\slash", "nul\x00byte", "line\nbreak"],
+        3: ["${x}", "plain"],
+        4: ["${spark.app.name}", "$\\{esc}"],
+        5: ["other"],
+    }
+
+    def _frame(self, spark, docs):
+        return spark.createDataFrame(
+            sorted(docs.items()),
+            f"`{self.PKEY}` long, search_tokens array<string>",
+        )
+
+    @staticmethod
+    def _reference(docs, terms):
+        want = {}
+        for key, toks in docs.items():
+            n = len(set(toks) & set(terms))
+            if n:
+                want[key] = (float(n) / float(len(terms))).hex()
+        return want
+
+    def _got(self, df):
+        return {r[self.PKEY]: r["fts_score"].hex() for r in df.collect()}
+
+    def _check(self, mgr, docs):
+        term_sets = [self.ODD, ["o'brien"], ["${x}", "plain"], ["absent"]]
+        for terms, multi in zip(term_sets, mgr.probe_scores_multi(term_sets)):
+            want = self._reference(docs, terms)
+            assert self._got(mgr.probe_scores(terms)) == want, terms
+            assert self._got(multi) == want, terms
+        assert self._got(mgr.probe_scores([])) == {}
+
+    def test_fresh_index(self, spark, tmp_path):
+        mgr = JobFtsIndexManager(
+            spark, str(tmp_path / "fidx"), {"term_buckets": 4}
+        )
+        mgr.build(self._frame(spark, self.DOCS), self.PKEY)
+        self._check(mgr, self.DOCS)
+
+    def test_fastupdate_overlay(self, spark, tmp_path):
+        mgr = JobFtsIndexManager(
+            spark,
+            str(tmp_path / "fast"),
+            {"term_buckets": 4, "fastupdate": True, "compact_every": 99},
+        )
+        mgr.build(self._frame(spark, self.DOCS), self.PKEY)
+        changed = {5: ["${x}", "line\nbreak"], 1: ["plain"]}
+        mgr.upsert(self._frame(spark, changed), self.PKEY, None)
+        docs = {**self.DOCS, **changed}
+        self._check(mgr, docs)

@@ -748,3 +748,34 @@ class TestDriftRetrain:
         got = _indexed_actual(sess, "djob", QUERY, k=10)
         want = _brute_expected(sess, "djob", QUERY, k=10)
         assert got == want
+
+
+class TestEmptyProbeLists:
+    """An empty cell / Hamming-ball list renders as ``false`` — the probe
+    selects no rows (``IN ()`` does not parse) instead of raising."""
+
+    def _mgr(self, spark, tmp_path, method, params):
+        from pg_vectorize_spark.index_manager import JobIndexManager
+
+        emb = spark.createDataFrame(
+            [(i, [float(i % 3) - 1.0, 1.0, 0.5 - (i % 2)]) for i in range(12)],
+            "id long, embeddings array<double>",
+        )
+        mgr = JobIndexManager(spark, str(tmp_path / method), method, params)
+        mgr.build(emb, "id")
+        return mgr
+
+    def test_ivf_no_cells(self, spark, tmp_path):
+        mgr = self._mgr(spark, tmp_path, "ivf", {"n_centroids": 2})
+        q = [1.0, 1.0, 0.0]
+        assert mgr._ivf_candidates(q, 0).count() == 0
+        assert mgr._ivf_candidates(q, 2).count() == 12
+
+    def test_signbit_no_probes(self, spark, tmp_path, monkeypatch):
+        import pg_vectorize_spark.operators.ann as ann
+
+        mgr = self._mgr(spark, tmp_path, "signbit", {"nbits": 2})
+        q = [1.0, 1.0, 0.0]
+        assert mgr._signbit_candidates(q, 2).count() == 12
+        monkeypatch.setattr(ann, "_hamming_ball", lambda *a: [])
+        assert mgr._signbit_candidates(q, 2).count() == 0

@@ -429,7 +429,7 @@ class TestDedupPackParity:
         rows += [(110, rows[4][1] + " tail"), (111, rows[4][1] + " tails")]
         return spark.createDataFrame(rows, "doc_id long, text string")
 
-    @pytest.mark.parametrize("method", ["minhash", "simhash"])
+    @pytest.mark.parametrize("method", ["minhash", "simhash", "exact"])
     def test_fused_equals_chain(self, spark, method):
         df = self._docs(spark)
         pipe = CorpusPipeline(spark, df)

@@ -167,6 +167,10 @@ class TestIndexScanInvalidation:
 
 
 class TestQueryVectorLit:
+    """The one-parse query-vector literal must carry the exact Python
+    doubles — pinned against the inputs' own ``float.hex()`` and a
+    pure-Python left-to-right dot fold."""
+
     def test_bit_parity_with_elementwise_form(self, spark):
         import random
 
@@ -180,33 +184,28 @@ class TestQueryVectorLit:
             [1.0, -2.5, 0.0, 3.14159265358979],
             [1e-300, -1e300, 5e-324, 1.7976931348623157e308],
             [random.uniform(-1, 1) for _ in range(64)],
+            [-0.0, 2.2250738585072014e-308, 4.9406564584124654e-324],
         ]
         df = spark.range(1)
         for v in vecs:
-            row = df.select(
-                query_vector_lit(v).alias("new"),
-                F.array(*[F.lit(float(x)) for x in v]).alias("old"),
-            ).collect()[0]
-            assert [float(a).hex() for a in row["new"]] == [
-                float(b).hex() for b in row["old"]
-            ]
-            nn, oo = df.select(
+            lit, dot = df.select(
+                query_vector_lit(v).alias("v"),
                 dot_product(query_vector_lit(v), query_vector_lit(v)),
-                dot_product(
-                    F.array(*[F.lit(float(x)) for x in v]),
-                    F.array(*[F.lit(float(x)) for x in v]),
-                ),
             ).collect()[0]
-            assert float(nn).hex() == float(oo).hex()
+            assert [float(a).hex() for a in lit] == [x.hex() for x in v]
+            want = 0.0
+            for x in v:
+                want = want + x * x
+            assert float(dot).hex() == want.hex()
 
     def test_empty_and_nonfinite_fallback(self, spark):
+        # formerly the element-wise fallback's inputs; now the same parse
         from pg_vectorize_spark.functions.vector import query_vector_lit
 
         df = spark.range(1)
-        assert df.select(query_vector_lit([]).alias("e")).collect()[0][
-            "e"
-        ] == []
-        got = df.select(
-            query_vector_lit([float("inf"), 1.0]).alias("e")
-        ).collect()[0]["e"]
-        assert got[0] == float("inf") and got[1] == 1.0
+        empty = df.select(query_vector_lit([]).alias("e"))
+        assert empty.schema["e"].dataType.simpleString() == "array<double>"
+        assert empty.collect()[0]["e"] == []
+        v = [float("inf"), 1.0, float("-inf"), float("nan"), -0.0]
+        got = df.select(query_vector_lit(v).alias("e")).collect()[0]["e"]
+        assert [float(x).hex() for x in got] == [x.hex() for x in v]

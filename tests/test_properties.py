@@ -11,7 +11,7 @@ import re
 
 import pytest
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pg_vectorize_spark.filters import (
@@ -615,3 +615,79 @@ class TestSpanRemovalProperties:
             assert out[i]["n_removed_words"] == len(orig) - len(clean)
             if not out[i]["was_rewritten"]:
                 assert out[i]["n_removed_words"] == 0
+
+
+class TestSqlTextRenderer:
+    """sqltext renders Python values as Spark SQL text: every rendering
+    parses back to exactly the value. Each example set is ONE select, so
+    the class costs a few Spark jobs."""
+
+    @settings(max_examples=6, deadline=None)
+    @given(st.lists(st.text(max_size=12), min_size=1, max_size=30))
+    @example(["${spark.app.name}", "${x}", "$\\{y}", "$${z}", "it's",
+              "back\\slash\\", "\\'", "nul\x00", "nl\ncr\r\ttab",
+              "\x7f\x1b", "\U0001F600 astral", "", "'", "\\"])
+    def test_strings_round_trip(self, spark, strings):
+        from pg_vectorize_spark import sqltext as sq
+
+        row = spark.range(1).selectExpr(
+            *[f"{sq.string(v)} AS c{i}" for i, v in enumerate(strings)]
+        ).collect()[0]
+        assert list(row) == strings
+
+    @settings(max_examples=6, deadline=None)
+    @given(
+        st.lists(
+            st.text(alphabet="ab `'\".-_$1{}\t\u4e2d\xe9\U0001F600",
+                    min_size=1, max_size=8).filter(lambda n: "${" not in n),
+            min_size=1,
+            max_size=12,
+            unique=True,
+        )
+    )
+    @example(["a`b", "1abc", "with space", "``", "a.b", "` `"])
+    def test_identifiers_round_trip(self, spark, names):
+        from pg_vectorize_spark import sqltext as sq
+
+        df = spark.range(1).selectExpr(
+            *[f"{i} AS {sq.ident(n)}" for i, n in enumerate(names)]
+        )
+        assert df.columns == names
+        row = df.selectExpr(*[sq.ident(n) for n in names]).collect()[0]
+        assert list(row) == list(range(len(names)))
+        with pytest.raises(ValueError):
+            sq.ident("a${b}")
+
+    @settings(max_examples=6, deadline=None)
+    @given(st.lists(st.floats(width=64), min_size=1, max_size=40))
+    @example([0.0, -0.0, 5e-324, -5e-324, 2.225073858507201e-308,
+              1.7976931348623157e308, float("inf"), float("-inf"),
+              float("nan"), 0.1, 1e-7, 1e22])
+    def test_doubles_round_trip(self, spark, vals):
+        from pg_vectorize_spark import sqltext as sq
+
+        row = spark.range(1).selectExpr(
+            f"{sq.vector(vals)} AS v",
+            *[f"{sq.double(x)} AS c{i}" for i, x in enumerate(vals)],
+        ).collect()[0]
+        want = [x.hex() for x in vals]
+        assert [float(x).hex() for x in row["v"]] == want
+        assert [float(x).hex() for x in list(row)[1:]] == want
+
+    def test_in_lists(self, spark):
+        from pg_vectorize_spark import sqltext as sq
+
+        df = spark.createDataFrame(
+            [(i, s) for i, s in enumerate(["a", "it's", "${x}", "\\"])],
+            "id long, s string",
+        )
+        assert sq.in_list("id", []) == "false"
+        assert df.where(sq.in_list("id", [])).count() == 0
+        assert df.where(sq.in_list("s", [])).count() == 0
+        assert sorted(
+            r["id"] for r in df.where(sq.in_list("id", [1, 3, 99])).collect()
+        ) == [1, 3]
+        assert sorted(
+            r["id"]
+            for r in df.where(sq.in_list("s", ["it's", "${x}", "\\"])).collect()
+        ) == [1, 2, 3]

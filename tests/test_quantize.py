@@ -80,7 +80,7 @@ def test_quantized_topk_agrees_with_exact(spark):
     exact = [
         r["id"]
         for r in qdf.select(
-            "id", cosine_similarity_to_query(F.col("v"), query).alias("s")
+            "id", cosine_similarity_to_query("v", query).alias("s")
         )
         .orderBy(F.desc("s"), "id")
         .limit(3)
@@ -90,11 +90,11 @@ def test_quantized_topk_agrees_with_exact(spark):
         r["id"]
         for r in qdf.select(
             "id",
-            cosine_similarity_to_query(
-                dequantize_expr(F.col("codes"), F.col("mn"), F.col("mx")),
-                query,
-            ).alias("s"),
+            dequantize_expr(F.col("codes"), F.col("mn"), F.col("mx")).alias(
+                "d"
+            ),
         )
+        .select("id", cosine_similarity_to_query("d", query).alias("s"))
         .orderBy(F.desc("s"), "id")
         .limit(3)
         .collect()

@@ -727,131 +727,187 @@ class TestMmrRerank:
         assert all("content" in r and "id" not in r for r in div2)
 
 
+def _fold_score(emb, q, pre_normalized):
+    """Independent reference for ``_scored_semantic``: pure-Python
+    left-to-right float64 folds (the folds of ann.probe_cells_local)
+    under Spark's NULL rules — ``zip_with`` pads the shorter side with
+    NULL, a NULL poisons the dot fold, a NULL or non-positive
+    denominator scores 0.0, and NaN compares greater than any number
+    (so a NaN denominator passes the ``> 0`` guard)."""
+    dot = None
+    if emb is not None and len(emb) == len(q):
+        dot = 0.0
+        for x, y in zip(emb, q):
+            dot = dot + x * y
+    if pre_normalized:
+        return dot
+    if emb is None:
+        return 0.0
+    ss = 0.0
+    for x in emb:
+        ss = ss + x * x
+    qq = 0.0
+    for y in q:
+        qq = qq + y * y
+    denom = math.sqrt(ss) * math.sqrt(qq)
+    if not (denom > 0 or math.isnan(denom)):
+        return 0.0
+    return None if dot is None else dot / denom
+
+
+def _hex(x):
+    return None if x is None else float(x).hex()
+
+
 class TestScoredSemanticSqlParity:
-    """The SQL-string score construction (one parse round-trip) must be
-    float-bit-equal to the Column/HOF form it replaced on the serving
-    critical path — adversarial doubles included."""
+    """The one-parse score expression must be float-bit-equal to the
+    independent pure-Python fold — adversarial doubles, non-finite
+    components, the empty vector and awkward column names included."""
 
     VECS = [
         [0.5, -0.25, 3.0],
         [1e-12, 1e12, -1e-12],
         [5e-324, 1.7976931348623157e308 / 1e10, -0.1],
         [0.1, 0.2, 0.3],
+        [-0.0, 0.0, 1.0],
+    ]
+    ROWS = [
+        (1, [1.0, 2.0, 3.0]),
+        (2, [0.0, 0.0, 0.0]),  # zero norm -> score 0.0
+        (3, [-1e-300, 1e300, 0.5]),
+        (4, [0.1, 0.2, 0.3]),
+        (5, None),
+        (6, [float("inf"), 1.0, -1.0]),
+        (7, [1.0, 2.0]),  # length mismatch -> NULL dot
     ]
 
-    def _frames(self, spark):
-        rows = [
-            (1, [1.0, 2.0, 3.0]),
-            (2, [0.0, 0.0, 0.0]),  # zero norm -> score 0.0
-            (3, [-1e-300, 1e300, 0.5]),
-            (4, [0.1, 0.2, 0.3]),
-            (5, None),
-        ]
-        return spark.createDataFrame(
-            rows, "id long, embeddings array<double>"
+    def _check(self, spark, qv, pkey="id", emb_col="embeddings"):
+        import pg_vectorize_spark.operators.search as S
+        from pg_vectorize_spark import sqltext as sq
+
+        df = spark.createDataFrame(
+            self.ROWS,
+            f"{sq.ident(pkey)} long, {sq.ident(emb_col)} array<double>",
         )
+        for pre in (False, True):
+            out = S._scored_semantic(df, pkey, qv, emb_col, pre)
+            assert out.columns == [pkey, "similarity_score"]
+            got = {
+                r[pkey]: _hex(r["similarity_score"]) for r in out.collect()
+            }
+            want = {
+                k: _hex(_fold_score(e, qv, pre)) for k, e in self.ROWS
+            }
+            assert got == want, (qv, pre)
 
     def test_sql_form_bit_equal_to_column_form(self, spark):
-        import pg_vectorize_spark.operators.search as S
-
-        df = self._frames(spark)
+        # name kept from the Column-twin era; the reference is now the
+        # pure-Python fold
         for qv in self.VECS:
-            for pre in (False, True):
-                new = S._scored_semantic(df, "id", qv, "embeddings", pre)
-                # force the Column fallback (the pre-change construction)
-                # via the explicit kwarg (ADVICE r13: no global swapping)
-                old = S._scored_semantic(
-                    df, "id", qv, "embeddings", pre,
-                    _force_column_form=True,
-                )
-                got = {
-                    r["id"]: r["similarity_score"] for r in new.collect()
-                }
-                want = {
-                    r["id"]: r["similarity_score"] for r in old.collect()
-                }
-                assert set(got) == set(want)
-                for k in want:
-                    a, b = got[k], want[k]
-                    if a is None or b is None:
-                        assert a is b
-                    else:
-                        assert a.hex() == b.hex(), (qv, pre, k, a, b)
+            self._check(spark, qv)
 
     def test_empty_and_nonfinite_vectors_take_fallback(self, spark):
-        import pg_vectorize_spark.operators.search as S
+        # formerly routed to the Column twin; now the same single parse
+        big = 1.7976931348623157e308
+        for qv in (
+            [],
+            [float("nan"), 1.0, 2.0],
+            [float("inf"), 1.0, 2.0],
+            [float("-inf"), 0.0, 1.0],
+            [big, big, 1.0],  # finite, but the squared norm overflows
+        ):
+            self._check(spark, qv)
 
-        df = self._frames(spark)
-        out = S._scored_semantic(df, "id", [], "embeddings", False)
-        assert out.columns == ["id", "similarity_score"]
-        nf = S._scored_semantic(
-            df, "id", [float("nan"), 1.0, 2.0], "embeddings", False
+    def test_awkward_column_names(self, spark):
+        qv = [0.5, -0.25, 3.0]
+        self._check(spark, qv, pkey="1abc", emb_col="emb vec")
+        self._check(spark, qv, pkey="a`b", emb_col="1e`x")
+        # and through the join-back / ordering / projection
+        src = spark.createDataFrame(
+            [(1, "x"), (2, "y"), (3, "z")], "`a``b` long, body string"
         )
-        assert nf.columns == ["id", "similarity_score"]
+        emb = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+            "`a``b` long, embeddings array<double>",
+        )
+        rows = semantic_search(src, emb, "a`b", [1.0, 0.0]).collect()
+        assert [r["a`b"] for r in rows] == [1, 3, 2]
+        assert rows[0].asDict().keys() == {"a`b", "body", "similarity_score"}
+
+
+def _fused_reference(sem, fts, w_s, w_f, k):
+    """Independent reference for the RRF fusion: id -> (rrf, sem_rank,
+    fts_rank, similarity) with the coalesce-to-0.0 rule of
+    core/src/query.rs:744-747, in Python float64."""
+    out = {}
+    for key in {r[0] for r in sem} | {r[0] for r in fts}:
+        sr = next((r for r in sem if r[0] == key), None)
+        fr = next((r for r in fts if r[0] == key), None)
+        s_rank = sr[2] if sr else None
+        f_rank = fr[1] if fr else None
+        rrf = (0.0 if s_rank is None else w_s / (k + s_rank)) + (
+            0.0 if f_rank is None else w_f / (k + f_rank)
+        )
+        out[key] = (_hex(rrf), s_rank, f_rank, _hex(sr[1] if sr else None))
+    return out
 
 
 class TestFuseSqlParity:
-    """The selectExpr/F.expr fusion construction must reproduce the
-    Column form's rows bit-for-bit, including NULL-rank coalesce and
-    non-trivial weights."""
+    """The selectExpr/F.expr fusion must reproduce the independent
+    Python reference bit-for-bit, including NULL-rank coalesce,
+    non-finite weights, a fractional ``rrf_k`` and awkward key names."""
 
-    def test_fusion_bit_equal(self, spark):
+    SEM = [(1, 0.9, 1), (2, 0.8, 2), (3, 0.7, 3), (7, 0.6, 4)]
+    FTS = [(2, 5), (3, 1), (4, 2), (5, 3)]
+
+    def _check(self, spark, w_s, w_f, k, pkey="id"):
         import pg_vectorize_spark.operators.search as S
+        from pg_vectorize_spark import sqltext as sq
 
+        qp = sq.ident(pkey)
         src = spark.createDataFrame(
             [(i, f"doc {i}", i % 3) for i in range(1, 9)],
-            "id long, body string, grp int",
+            f"{qp} long, body string, grp int",
         )
         sem = spark.createDataFrame(
-            [(1, 0.9, 1), (2, 0.8, 2), (3, 0.7, 3), (7, 0.6, 4)],
-            "id long, similarity_score double, semantic_rank int",
+            self.SEM, f"{qp} long, similarity_score double, semantic_rank int"
         )
-        fts = spark.createDataFrame(
-            [(2, 5), (3, 1), (4, 2), (5, 3)],
-            "id long, fts_rank int",
-        )
+        fts = spark.createDataFrame(self.FTS, f"{qp} long, fts_rank int")
+        rows = S._fuse_and_project(
+            src, sem, fts, pkey, 10, k, w_s, w_f, None, None, None
+        ).collect()
+        got = {
+            r[pkey]: (
+                _hex(r["rrf_score"]),
+                r["semantic_rank"],
+                r["fts_rank"],
+                _hex(r["similarity_score"]),
+            )
+            for r in rows
+        }
+        assert got == _fused_reference(self.SEM, self.FTS, w_s, w_f, k)
+        return rows
+
+    def test_fusion_bit_equal(self, spark):
         for w_s, w_f, k in [(1.0, 1.0, 60), (0.7, 0.3, 60), (2.5, 0.1, 7)]:
-            new = S._fuse_and_project(
-                src, sem, fts, "id", 10, k, w_s, w_f, None, None, None
-            )
-            old = S._fuse_and_project(
-                src, sem, fts, "id", 10, k, w_s, w_f, None, None, None,
-                _force_column_form=True,
-            )
-            rn = new.collect()
-            ro = old.collect()
-            assert [r["id"] for r in rn] == [r["id"] for r in ro]
-            for a, b in zip(rn, ro):
-                assert a["rrf_score"].hex() == b["rrf_score"].hex()
-                assert a["semantic_rank"] == b["semantic_rank"]
-                assert a["fts_rank"] == b["fts_rank"]
-                sa, sb = a["similarity_score"], b["similarity_score"]
-                assert (sa is None and sb is None) or sa.hex() == sb.hex()
+            rows = self._check(spark, w_s, w_f, k)
+            # (desc rrf, asc key) order
+            keys = [(-r["rrf_score"], r["id"]) for r in rows]
+            assert keys == sorted(keys)
 
     def test_nonfinite_weights_and_fractional_k_take_fallback(self, spark):
-        import pg_vectorize_spark.operators.search as S
-
-        src = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "id long, body string"
-        )
-        sem = spark.createDataFrame(
-            [(1, 0.9, 1), (2, 0.8, 2)],
-            "id long, similarity_score double, semantic_rank int",
-        )
-        fts = spark.createDataFrame([(2, 1), (3, 2)], "id long, fts_rank int")
-        # inf/nan weights and a fractional rrf_k have no SQL literal /
-        # would truncate — they must take the Column form, not raise
-        out = S._fuse_and_project(
-            src, sem, fts, "id", 10, 60, float("inf"), 1.0, None, None, None
-        ).collect()
-        assert len(out) == 3
-        out = S._fuse_and_project(
-            src, sem, fts, "id", 10, 60, float("nan"), 1.0, None, None, None
-        ).collect()
-        assert len(out) == 3
-        frac = S._fuse_and_project(
-            src, sem, fts, "id", 10, 60.5, 1.0, 1.0, None, None, None
-        ).collect()
-        # fractional k must actually divide by 60.5, not a truncated 60
-        r1 = [r for r in frac if r["id"] == 1][0]
+        # formerly routed to the Column twin; now the same single parse
+        inf, nan = float("inf"), float("nan")
+        for w_s, w_f, k in [
+            (inf, 1.0, 60), (nan, 1.0, 60), (1.0, -inf, 60),
+            (1.0, 1.0, 60.5),
+        ]:
+            self._check(spark, w_s, w_f, k)
+        # fractional k divides by 60.5, not a truncated 60
+        rows = self._check(spark, 1.0, 1.0, 60.5)
+        r1 = [r for r in rows if r["id"] == 1][0]
         assert r1["rrf_score"] == 1.0 / (60.5 + 1)
+
+    def test_awkward_key_names(self, spark):
+        self._check(spark, 0.7, 0.3, 60, pkey="1abc")
+        self._check(spark, 0.7, 0.3, 60, pkey="a`b")

@@ -290,3 +290,66 @@ class TestEnsureMinPartitions:
         out = ensure_min_partitions(df)
         assert "LogicalRDD" not in out._jdf.queryExecution().analyzed().toString()
         assert out.count() == 100
+
+
+class TestPlanHasExchangeLogsFallback:
+    """Every fallback of the shuffle probe is logged at WARNING; the
+    known shapes stay silent."""
+
+    @staticmethod
+    def _stub(plan=None, exc=None):
+        from types import SimpleNamespace
+
+        def to_string():
+            if exc is not None:
+                raise exc
+            return plan
+
+        executed = SimpleNamespace(toString=to_string)
+        qe = SimpleNamespace(executedPlan=lambda: executed)
+        return SimpleNamespace(
+            _jdf=SimpleNamespace(queryExecution=lambda: qe)
+        )
+
+    def _probe(self, caplog, df):
+        import logging
+
+        from pg_vectorize_spark.operators import skew
+
+        with caplog.at_level(logging.DEBUG, logger=skew.__name__):
+            found = skew._plan_has_exchange(df)
+        return found, [
+            r for r in caplog.records if r.levelno >= logging.WARNING
+        ]
+
+    def test_unreadable_plan_warns(self, caplog):
+        found, warned = self._probe(
+            caplog, self._stub(exc=RuntimeError("py4j gone"))
+        )
+        assert found is False
+        assert len(warned) == 1 and "unreadable" in warned[0].getMessage()
+        assert "py4j gone" in warned[0].getMessage()
+
+    def test_unknown_exchange_beside_broadcast_warns(self, caplog):
+        found, warned = self._probe(
+            caplog,
+            self._stub(
+                "BroadcastExchange HashedRelationBroadcastMode(List(k)) "
+                "+- Exchange FooPartitioning(k, 8)"
+            ),
+        )
+        assert found is False
+        assert len(warned) == 1 and "stale" in warned[0].getMessage()
+
+    @pytest.mark.parametrize(
+        "plan, expect",
+        [
+            ("BroadcastExchange HashedRelationBroadcastMode(List(k))", False),
+            ("Project [id, (id * 2) AS ExchangeRate#3L]", False),
+            ("Exchange hashpartitioning(k#1L, 8), ENSURE_REQUIREMENTS", True),
+        ],
+    )
+    def test_known_shapes_stay_silent(self, caplog, plan, expect):
+        found, warned = self._probe(caplog, self._stub(plan))
+        assert found is expect
+        assert warned == []

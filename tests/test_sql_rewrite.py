@@ -11,8 +11,8 @@ from pg_vectorize_spark.errors import JobNotFoundError, VectorizeError
 from pg_vectorize_spark.sql_rewrite import (
     find_embed_calls,
     rewrite_embed_calls,
-    vector_sql_literal,
 )
+from pg_vectorize_spark.sqltext import vector as vector_sql_literal
 
 
 class TestParse:
@@ -50,7 +50,12 @@ class TestParse:
 
     def test_vector_literal_shape(self):
         lit = vector_sql_literal([0.5, 1.0])
-        assert lit == "array(CAST(0.5 AS DOUBLE), CAST(1.0 AS DOUBLE))"
+        assert lit == "array(0.5D,1.0D)"
+        # non-finite components have no bare literal: CAST(inf AS DOUBLE)
+        # would resolve `inf` as a column
+        assert vector_sql_literal([float("inf"), float("nan")]) == (
+            "array(CAST('Infinity' AS DOUBLE),CAST('NaN' AS DOUBLE))"
+        )
 
 
 @pytest.fixture()
@@ -81,7 +86,15 @@ class TestRewrite:
             "SELECT vectorize.embed('pencil', 'sqljob') AS v", sess
         )
         assert "vectorize.embed" not in out
-        assert out.startswith("SELECT array(CAST(")
+        assert out.startswith("SELECT array(")
+        # the spliced literal parses back to the provider's exact doubles
+        from pg_vectorize_spark.providers.registry import get_provider
+
+        want = get_provider(sess.catalog.get("sqljob").model).generate_embedding(
+            ["pencil"]
+        )[0]
+        got = sess.spark.sql(out).head()["v"]
+        assert [float(x).hex() for x in got] == [float(x).hex() for x in want]
 
     def test_sql_end_to_end(self, sess):
         """The proxy's flagship flow: embed-in-SQL over the job view."""
